@@ -58,17 +58,18 @@ object Maintain {
       // vectors per task plus doubling-growth churn; 1024 keeps 32
       // concurrent fused read+write tasks inside the heap
       .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
-      // Every engine write is already source-clustered per task (range
-      // exchanges use exact-placement keys; the copy-forward merge keeps
-      // single-file tasks via openCostInBytes below), so the dynamic-
-      // partition writer's sort — which MATERIALIZES each task's whole
-      // input before writing and spilled GBs at 32 cores — buys nothing:
-      // concurrent writers bound memory at writers × block.size instead.
+      // Every engine write is already source-clustered per task: range
+      // exchanges use exact-placement keys, and a copy-forward merge task
+      // reads whole partition-pure files, so its rows arrive in runs of
+      // one source. The dynamic-partition writer's sort — which
+      // MATERIALIZES each task's whole input before writing and spilled
+      // GBs at 32 cores — buys nothing there: concurrent writers bound
+      // memory at writers × block.size instead. Scans keep Spark's 4 MB
+      // open cost, which packs small files into ≤ maxPartitionBytes
+      // splits (one task per file made a 20-row DELETE run ~100-200
+      // tasks); a packed task writes one file per source it holds, and
+      // only a task holding more than 4 sources falls back to the sort.
       .config("spark.sql.maxConcurrentOutputFileWriters", "4")
-      // one input FILE per scan task: keeps copy-forward output tasks
-      // single-source (files are partition-pure) and output files 1:1
-      // with inputs; costs only ~6 ms dispatch per extra small-file task
-      .config("spark.sql.files.openCostInBytes", (32L * 1024 * 1024).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.meta._
@@ -33,8 +33,10 @@ final case class ScanMetrics(
  *    (/root/reference/spark/jobs/silver/meetings.py:19,68-73), (b) genuine
  *    parquet min/max stats on `source` for file skipping, and (c) scans
  *    that are a plain multi-path parquet read — no basePath/partition
- *    discovery on the hot path. The duplicated column is dictionary-encoded
- *    by parquet; overhead is negligible.
+ *    discovery on the hot path. `source` keeps its parquet dictionary
+ *    (one value per file), so storing it costs a few bytes per page.
+ *  - Every data file goes through `TokenTable.writeData`, which sets the
+ *    columns' dictionary policy on the write itself, whatever the session.
  *  - Scans pass the declared schema (no footer-sampling schema inference —
  *    at 10^6 files inference would be a driver storm).
  */
@@ -106,8 +108,7 @@ final class TokenTable(val log: SnapshotLog, spark: SparkSession) {
   def appendPrepared(df: DataFrame, nowMs: Long = 0L,
       operation: String = "append", extraSummary: Map[String, String] = Map.empty): Snapshot = {
     val subdir = log.newDataSubdir()
-    df.withColumn("p_source", col("source"))
-      .write.partitionBy("p_source").parquet(subdir.toString)
+    TokenTable.writeData(df, subdir)
     commitAdd(subdir, nowMs, operation, extraSummary)
   }
 
@@ -135,9 +136,8 @@ final class TokenTable(val log: SnapshotLog, spark: SparkSession) {
   def replacePartitions(df: DataFrame, targetFileCount: Int,
       nowMs: Long = 0L): Snapshot = {
     val subdir = log.newDataSubdir()
-    df.repartitionByRange(targetFileCount, col("source"), col("doc_id"))
-      .withColumn("p_source", col("source"))
-      .write.partitionBy("p_source").parquet(subdir.toString)
+    TokenTable.writeData(
+      df.repartitionByRange(targetFileCount, col("source"), col("doc_id")), subdir)
     val touched = collectEntries(subdir)
       .flatMap(_.partition.get("source")).toSet
     val current = log.current().getOrElse(sys.error(s"no table at $root"))
@@ -420,6 +420,26 @@ object TokenTable {
   def carried(prev: Snapshot): Map[String, String] =
     prev.summary.view.filterKeys(k =>
       k == "source-dict" || k.startsWith("stream-batch-")).toMap
+
+  /** Parquet writer options of every data file. Uniform token ids and
+    * unique doc_ids defeat a dictionary: building one costs CPU, and its
+    * pages end up no smaller than the fallback encoding's. So both
+    * skip it; under the format-v2 writer (Maintain.session) `tokens` is
+    * then delta-bit-packed as one flat int column and `doc_id`
+    * prefix-delta encoded. `n_tok` and `source` keep their dictionaries.
+    * Per-write options reach `ParquetOutputFormat`'s per-column config,
+    * so the policy holds in every session. */
+  private val DataWriteOptions: Map[String, String] = Map(
+    "parquet.enable.dictionary#tokens.list.element" -> "false",
+    "parquet.enable.dictionary#doc_id" -> "false")
+
+  /** The engine's one data write: `df` (table-shaped) lands under `out` in
+    * hive-style `p_source=<v>/` dirs with the table's encoding policy.
+    * Each task writes one file per source it holds. */
+  def writeData(df: Dataset[_], out: Path): Unit =
+    df.withColumn("p_source", col("source"))
+      .write.options(DataWriteOptions)
+      .partitionBy("p_source").parquet(out.toString)
 
   def create(root: String, spark: SparkSession, nowMs: Long = 0L): TokenTable = {
     val t = new TokenTable(new SnapshotLog(root), spark)

@@ -462,19 +462,6 @@ object Merge {
     (bin, totalBins)
   }
 
-  /** Per-source range-binned write from the unit's own manifest stats:
-    * boundaries on the driver, one data pass, deterministic layout. */
-  private[graft] def writeBinned(merged: DataFrame, files: Seq[DataFile],
-      targetBytes: Long, out: Path): Unit = {
-    val (binCol, totalBins) = binColumn(files, targetBytes)
-    merged.withColumn("__bk", binCol)
-      .repartition(totalBins, col("__bk"))
-      .sortWithinPartitions(col("doc_id"))
-      .drop("__bk")
-      .withColumn("p_source", col("source"))
-      .write.partitionBy("p_source").parquet(out.toString)
-  }
-
   /** One sorted row during the iterator-based fused merge scan: TokenRow +
     * action priority (2 = delete, 1 = upsert, 0 = existing target row) +
     * the output bin key (run identity is (bin, doc_id) — ADVICE r4 #4:
@@ -587,8 +574,7 @@ object Merge {
             def next(): TokenRow = { val r = out; advance(); r }
           }
         }
-      merged.withColumn("p_source", col("source"))
-        .write.partitionBy("p_source").parquet(out.toString)
+      TokenTable.writeData(merged, out)
       (lonelyUp.value, lonelyDel.value)
     } else {
       // window formulation: one bin per task (exact-placement keys), so
@@ -610,8 +596,7 @@ object Merge {
           sum(when(col("__lonely") && col("prio") === 2, 1L).otherwise(0L)).as("ld"))
         .filter(col("__first") && col("prio") =!= 2)
         .drop("__bk", "__prev", "__next", "__first", "__lonely", "prio")
-      merged.withColumn("p_source", col("source"))
-        .write.partitionBy("p_source").parquet(out.toString)
+      TokenTable.writeData(merged, out)
       def metric(k: String): Long = obs.get.get(k) match {
         case Some(l: Long) => l
         case _ => 0L
@@ -637,16 +622,19 @@ object Merge {
    * WRITE SHAPE — copy-forward, ZERO exchange on the big side (the design
    * Delta/Iceberg copy-on-write MERGE ships, and the round-4 change that
    * moved this stage off the memory-bus ceiling): kept target rows stream
-   * scan → codegen'd filter → write inside their ORIGINAL file grouping
-   * and row order — no repartition, no sort — so the pass costs one read
-   * plus one write of the touched bytes, exactly like compaction (the
-   * engine's best-scaling stage). Upserted rows do NOT rejoin their old
-   * position: they shuffle (small side only — bounded by the change-set)
-   * into fresh range-clustered files, and the next compact/cluster pass
-   * folds them into the layout — the same contract appends and the
-   * insert unit already follow. Re-sorting the whole touched set inside
-   * MERGE (round 3's single-exchange design) priced every CDC batch at a
-   * full re-cluster of the touched bytes: unaffordable at 100 TB and,
+   * scan → codegen'd filter → write in scan order — no repartition, no
+   * sort — so the pass costs one read plus one write of the touched
+   * bytes, exactly like compaction (the engine's best-scaling stage).
+   * Small files are packed into ≤ maxPartitionBytes scan splits, so one
+   * task may carry several whole files, each in its own row order; it
+   * writes one file per source it holds, so output files stay
+   * single-source. Upserted rows do NOT rejoin their old position: they
+   * shuffle (small side only — bounded by the change-set) into fresh
+   * range-clustered files, and the next compact/cluster pass folds them
+   * into the layout — the same contract appends and the insert unit
+   * already follow. Re-sorting the whole touched set inside MERGE
+   * (round 3's single-exchange design) priced every CDC batch at a full
+   * re-cluster of the touched bytes: unaffordable at 100 TB and,
    * measured at bench scale, pinned to the DRAM-bandwidth scaling
    * ceiling that pure streaming avoids.
    */
@@ -697,8 +685,7 @@ object Merge {
           .repartition(nOut, pmod(xxhash64(col("doc_id")), lit(nOut)))
           .sortWithinPartitions(col("source"), col("doc_id")))
       }
-    merged.withColumn("p_source", col("source"))
-      .write.partitionBy("p_source").parquet(out.toString)
+    TokenTable.writeData(merged, out)
     obs.get.get("conflicts") match {
       case Some(l: Long) => l
       case _ => 0L
@@ -875,10 +862,9 @@ object Merge {
               math.ceil(insRows.toDouble * avgRowBytes / targetFileBytes).toInt)
             val outDir = table.log.newDataSubdir()
             lin.heartbeat(passId)
-            insDF.repartition(nIns, pmod(xxhash64(col("doc_id")), lit(nIns)))
-              .sortWithinPartitions(col("source"), col("doc_id"))
-              .withColumn("p_source", col("source"))
-              .write.partitionBy("p_source").parquet(outDir.toString)
+            TokenTable.writeData(
+              insDF.repartition(nIns, pmod(xxhash64(col("doc_id")), lit(nIns)))
+                .sortWithinPartitions(col("source"), col("doc_id")), outDir)
             val e = entriesOf(outDir)
             lin.append(LineageRecord(passId, "merge", "inserts", "done",
               0, Seq(table.log.relativize(outDir)), insRows, 0L, 1))

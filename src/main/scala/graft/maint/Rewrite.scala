@@ -253,9 +253,7 @@ object Rewrite {
         .sortWithinPartitions(col("__sk")).drop("__sk")
       case None => base
     }
-    sorted.drop("__bk")
-      .withColumn("p_source", col("source"))
-      .write.partitionBy("p_source").parquet(out.toString)
+    TokenTable.writeData(sorted.drop("__bk"), out)
     out
   }
 
@@ -405,10 +403,7 @@ object Rewrite {
           val clustered =
             if (doSort) binned.sortWithinPartitions(col("__sk"))
             else binned
-          clustered
-            .drop("__sk", "__bk")
-            .withColumn("p_source", col("source"))
-            .write.partitionBy("p_source").parquet(out.toString)
+          TokenTable.writeData(clustered.drop("__sk", "__bk"), out)
           val entries = table.collectEntries(out)
           lin.append(LineageRecord(pid, op, gKey, "done",
             grp.map(_._2.size).sum, Seq(table.log.relativize(out)),

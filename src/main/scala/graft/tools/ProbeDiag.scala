@@ -135,14 +135,7 @@ object ProbeDiag {
         }
         if (sys.env.get("SPARK_GRAFT_PROF_ALL").contains("1")) {
           val out1 = t.log.newDataSubdir()
-          tm("write-flat") {
-            merged.withColumn("p_source", col("source"))
-              .write.partitionBy("p_source").parquet(out1.toString)
-          }
-          val out2 = t.log.newDataSubdir()
-          tm("write-binned") {
-            Merge.writeBinned(merged, files, 8L * 1024 * 1024, out2)
-          }
+          tm("write-flat")(TokenTable.writeData(merged, out1))
         }
         src.unpersist()
 
