@@ -387,48 +387,6 @@ object Bench {
     // Manual probe mode (not the driver path): `pipeline c1 r1 c2 r2 ...`
     // runs the full maintenance pipeline at each (cpus, rows) pair in ONE
     // JVM (first pair doubles as JIT warmup) and prints per-stage stats.
-    // Manual A/B mode: `absort <cpus> <rows> <passesPerMode>` builds one
-    // table then alternates cluster passes with the within-file sort forced
-    // ON/OFF (graft.cluster.sort prop) in a single JVM — the only honest
-    // comparison on a shared host whose envelope drifts minute-to-minute.
-    // Pass k re-clusters pass k-1's output, so all passes after the first
-    // see the same bytes/layout; per-mode MIN filters contention spikes.
-    if (args.nonEmpty && args(0) == "absort") {
-      val (cp, rw, per) = (args(1).toInt, args(2).toLong, args(3).toInt)
-      val spark = session(cp, aqe = false)
-      val root = benchRoot(cp)
-      try {
-        val t = TokenTable.create(root, spark, 1L)
-        val df = Synth.tableDistributed(spark, rw, 42L,
-          files = math.max(256, (rw / 50000).toInt), minTok = 16, maxTok = 512)
-        t.appendPrepared(df, nowMs = 1L)
-        val bytes1 = t.describe()("bytes").toLong
-        val target = math.max(8L * 1024 * 1024, bytes1 / 64)
-        Rewrite.compact(t, spark,
-          RewriteConfig(targetFileBytes = target, sortBy = "docid"), nowMs = 2L)
-        // warmup cluster pass (JIT) — discarded
-        sys.props("graft.cluster.sort") = "always"
-        Rewrite.cluster(t, spark,
-          RewriteConfig(targetFileBytes = target, sortBy = "zkey"), nowMs = 3L)
-        var now = 4L
-        (1 to per).foreach { i =>
-          Seq("always", "never").foreach { mode =>
-            sys.props("graft.cluster.sort") = mode
-            System.gc(); Thread.sleep(3000)
-            val (_, sec, gc) = time { Rewrite.cluster(t, spark,
-              RewriteConfig(targetFileBytes = target, sortBy = "zkey"), nowMs = now) }
-            now += 1
-            val bytes = t.describe()("bytes").toLong
-            println(f"absort cpus=$cp rows=$rw pass=$i mode=$mode%-6s " +
-              f"sec=$sec%8.2f gc_ms=$gc%6d bytes=$bytes")
-          }
-        }
-      } finally {
-        spark.stop()
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-      }
-      return
-    }
     if (args.nonEmpty && args(0) == "pipeline") {
       args.drop(1).grouped(2).foreach { case Array(c, r) =>
         val (cp, rw) = (c.toInt, r.toLong)

@@ -14,6 +14,7 @@ import org.apache.spark.sql.SparkSession
  * Usage:
  *   sbt "runMain graft.BenchExtra time [repeats] [namePrefix...]"
  *   sbt "runMain graft.BenchExtra explain <tag> [namePrefix...]"
+ *   sbt "runMain graft.BenchExtra jobs [namePrefix...]"
  *
  * Numbers printed here are cited in OPTIMIZATION_r06.md; the driver's own
  * artifact stays BENCH_r06.json via the frozen Bench main.
@@ -140,45 +141,6 @@ object BenchExtra {
           Thread.sleep(200) // let listener drain
           println(f"jobs $name%-28s wall=$wall%6.2f jobs=${nJobs.get}%3d jobwall=${t0all.get / 1e9}%6.2f")
         }
-      case "probe-d02" =>
-        // stage isolation via the noop sink (guide §1.4)
-        import org.apache.spark.sql.functions._
-        val ws = split(col("text"), " ")
-        def shOf(w: org.apache.spark.sql.Column) = array_distinct(
-          transform(sequence(lit(1), size(w) - 1),
-            i => xxhash64(element_at(w, i), element_at(w, i + 1))))
-        val sh = shOf(ws) // lambda re-splits per element (the old shape)
-
-        def noop(df: org.apache.spark.sql.DataFrame, tag: String): Unit = {
-          spark.sparkContext.setJobDescription(s"d02probe-$tag")
-          val t0 = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
-          println(f"d02probe $tag%-12s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-        }
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        noop(docs.select(col("doc_id")), "scan")
-        noop(docs.select(col("doc_id"), ws.as("ws")), "split")
-        val d = docs.select(col("doc_id"), col("lang"), sh.as("sh"))
-          .withColumn("nsh", size(col("sh")).cast("long"))
-        noop(d, "shingles")
-        noop(d, "shingles2") // repeat: JIT/cache-warm second pass
-        val dMat = docs.select(col("doc_id"), col("lang"), ws.as("w"))
-          .select(col("doc_id"), col("lang"), shOf(col("w")).as("sh"))
-          .withColumn("nsh", size(col("sh")).cast("long"))
-        noop(dMat, "shingles-mat") // split materialized before the lambda
-        val posts = dMat.select(col("doc_id"), col("nsh"), col("lang"),
-          explode(col("sh")).as("gh"))
-        noop(posts, "explode")
-        noop(posts, "explode2")
-        val grouped = posts.groupBy("gh").agg(
-            graft.functions.BoundedCollect.list(
-              struct(col("doc_id"), col("nsh"), col("lang")), 21).as("ds"),
-            count(lit(1)).as("df"))
-          .filter(col("df") <= 20 && col("df") >= 2)
-        noop(grouped, "grouped")
-        val t0 = System.nanoTime()
-        SparkEntry.queries("d02_dedup_ngram_jaccard")(spark, sfDir).count()
-        println(f"d02probe full        ${(System.nanoTime() - t0) / 1e9}%7.3f s")
       case other => sys.error(s"unknown mode $other")
     } finally spark.stop()
   }

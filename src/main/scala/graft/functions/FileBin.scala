@@ -159,15 +159,6 @@ object KeyMapCode {
     if (claimed == null) 0 else if (claimed.equals(source)) 1 else 2
   }
 
-  def buildMap(pairs: IterableOnce[(String, String)])
-      : java.util.HashMap[UTF8String, UTF8String] = {
-    val m = new java.util.HashMap[UTF8String, UTF8String]()
-    pairs.iterator.foreach { case (k, v) =>
-      m.put(UTF8String.fromString(k), UTF8String.fromString(v))
-    }
-    m
-  }
-
   def of(docId: Column, source: Column,
       bc: Broadcast[java.util.HashMap[UTF8String, UTF8String]]): Column =
     Bridge.column(KeyMapCode(Bridge.expression(docId),

@@ -15,8 +15,12 @@ import graft.meta.{DataFile, Snapshot}
 
 /**
  * MERGE INTO over the token table: upsert/delete a change-set Dataset keyed
- * on doc_id, executed as independent per-range merge units with a
- * sorted-merge (SortMergeJoin) on doc_id inside each unit.
+ * on doc_id, executed as independent per-range merge units. Neither
+ * execution path joins: change-sets up to `BroadcastSourceRows` probe a
+ * broadcast doc_id key map inside the target scan (`broadcastMergeWrite`),
+ * larger ones run a fused window run-scan over the unioned target and
+ * source rows (`fusedMergeWrite`). `mergeFrames` is the SortMergeJoin
+ * reference both paths are spec-checked against.
  *
  * Semantics preserved from the reference (SURVEY.md §7.5):
  *  - source dedup uses the reference's rank-to-1 pattern
@@ -78,17 +82,19 @@ import graft.meta.{DataFile, Snapshot}
  *     resumed with a different source or a flipped path choice (ADVICE r3
  *     #3) never reuses stale staged output.
  *
- *  5. OUTPUT LAYOUT — each unit's merged rows are range-binned by
- *     (source, doc_id-prefix) with boundaries computed ON THE DRIVER from
- *     the unit's own manifest byte/span stats (Boundaries.fromFileStats):
- *     one pass, no repartitionByRange sampling, no persist, and a layout
- *     that is byte-identical at every parallelism level.
+ *  5. OUTPUT LAYOUT — on the run-scan path each unit's merged rows are
+ *     range-binned by (source, doc_id-prefix) with boundaries computed ON
+ *     THE DRIVER from the unit's own manifest byte/span stats
+ *     (Boundaries.fromFileStats): one pass, no repartitionByRange
+ *     sampling, no persist, and a layout that is byte-identical at every
+ *     parallelism level. The key-map path copies kept rows forward in
+ *     scan order (see `broadcastMergeWrite`).
  *
- *  6. The join itself is an equi-join on unique doc_id: hash-distributed
- *     by construction (doc_id carries an xxhash64 prefix), so per-key skew
- *     is impossible; residual partition-size skew is handled by AQE
- *     skew-join and the broadcast path is suppressed so the planner keeps
- *     the sorted-merge shape the north rule names.
+ *  6. Keys are unique doc_ids, hash-distributed by construction (doc_id
+ *     carries an xxhash64 prefix), so per-key skew is impossible on either
+ *     path: the key-map probe streams the target scan with no exchange,
+ *     and the run-scan's one exchange is into range bins sized from
+ *     manifest bytes.
  */
 /** Thrown when a merge change-set violates the source-immutability
   * contract (an upsert/delete carries a different `source` than the stored
@@ -278,21 +284,6 @@ object Merge {
     }
   }
 
-  /** Sorted distinct key cells at adaptive granularity (summary helper,
-    * kept for specs). */
-  def keyCells(keys: DataFrame): (Int, Option[Array[Long]]) = {
-    def collect(c: Int): Option[Array[Long]] = {
-      val rows = keys.select(PrefixCode.code(col("doc_id"), c).as("c"))
-        .distinct().limit(CellCap + 1).collect()
-      if (rows.length > CellCap) None
-      else Some(rows.map(_.getLong(0)).sorted)
-    }
-    collect(RouteChars) match {
-      case Some(cs) => (RouteChars, Some(cs))
-      case None => (3, collect(3))
-    }
-  }
-
   /** Any cell in [lo, hi]? (binary search over the sorted cell array) */
   private def anyCellIn(cells: Array[Long], lo: Long, hi: Long): Boolean = {
     var a = 0; var b = cells.length
@@ -462,17 +453,6 @@ object Merge {
     (bin, totalBins)
   }
 
-  /** One sorted row during the iterator-based fused merge scan: TokenRow +
-    * action priority (2 = delete, 1 = upsert, 0 = existing target row) +
-    * the output bin key (run identity is (bin, doc_id) — ADVICE r4 #4:
-    * without the bin, two copies of a contract-violating key whose
-    * different bins hashed to the same shuffle partition fused into one
-    * run and the mutated upsert applied silently instead of counting as
-    * lonely, diverging from the window path's per-bin run detection). */
-  private[graft] final case class ScanRow(
-      doc_id: String, tokens: Array[Int], n_tok: Int, source: String,
-      prio: Int, __bk: Int)
-
   /** Evolved (addColumn) fields present in a unit scan beyond the base
     * TokenRow shape. */
   private def extraColumns(target: DataFrame)
@@ -497,17 +477,17 @@ object Merge {
    * rows: one target copy (table uniqueness) and one source action
    * (dedupSource), and the higher-priority row decides.
    *
-   * Default formulation (VERDICT r3 next-step 3): lag/lead over a window
+   * Formulation (VERDICT r3 next-step 3): lag/lead over a window
    * partitioned by the BIN — its required distribution is exactly the
    * exchange the write needs and its sort IS the output clustering, so
    * Catalyst adds no extra exchange, the rows stay UnsafeRow end-to-end
    * (no Dataset-encoder materialization of every token array into JVM
-   * arrays, which the round-3 `as[ScanRow].mapPartitions` run scan paid),
-   * and the first/lonely flags are plain projections. Lonely-run counts
-   * (the provenance-contract probe) ride the same pass via
-   * `Dataset.observe` — zero extra jobs. The iterator formulation is kept
-   * behind SPARK_GRAFT_MERGE_RUNSCAN=iter for A/B measurement; the spec
-   * asserts both equal the SortMergeJoin reference.
+   * arrays), and the first/lonely flags are plain projections. Run
+   * identity is (bin, doc_id), so the two copies of a contract-violating
+   * key in different bins count as lonely. Lonely-run counts (the
+   * provenance-contract probe) ride the same pass via `Dataset.observe` —
+   * zero extra jobs. The spec asserts the output equals the SortMergeJoin
+   * reference (`mergeFrames`).
    *
    * Returns (lonely upserts, lonely deletes): source actions that matched
    * no target copy in their bin — legitimate inserts inside the unit range
@@ -531,78 +511,33 @@ object Merge {
       }: _*)
     val all = t.unionByName(s)
     val (binCol, totalBins) = binColumn(files, targetBytes)
-    val spark = target.sparkSession
     val binned = all.withColumn("__bk", binCol)
       .repartition(totalBins, col("__bk"))
-
-    if (extras.isEmpty &&
-        sys.env.get("SPARK_GRAFT_MERGE_RUNSCAN").contains("iter")) {
-      // (the iterator A/B formulation encodes to the fixed ScanRow shape,
-      // so it only runs on unevolved tables; the window path below is
-      // schema-generic)
-      // iterator reference formulation (round-3 production path)
-      import spark.implicits._
-      val lonelyUp = spark.sparkContext.longAccumulator("merge-lonely-upserts")
-      val lonelyDel = spark.sparkContext.longAccumulator("merge-lonely-deletes")
-      val merged = binned
-        .sortWithinPartitions(col("__bk"), col("doc_id"), col("prio").desc)
-        .as[ScanRow]
-        .mapPartitions { it =>
-          new Iterator[TokenRow] {
-            private var cur: ScanRow = if (it.hasNext) it.next() else null
-            private var out: TokenRow = null
-            private def advance(): Unit = {
-              out = null
-              while (out == null && cur != null) {
-                val first = cur
-                var runLen = 1
-                var nxt: ScanRow = if (it.hasNext) it.next() else null
-                while (nxt != null && nxt.__bk == first.__bk &&
-                    nxt.doc_id == first.doc_id) {
-                  runLen += 1
-                  nxt = if (it.hasNext) it.next() else null
-                }
-                cur = nxt
-                if (runLen == 1 && first.prio == 1) lonelyUp.add(1)
-                if (runLen == 1 && first.prio == 2) lonelyDel.add(1)
-                if (first.prio != 2)
-                  out = TokenRow(first.doc_id, first.tokens, first.n_tok, first.source)
-              }
-            }
-            advance()
-            def hasNext: Boolean = out != null
-            def next(): TokenRow = { val r = out; advance(); r }
-          }
-        }
-      TokenTable.writeData(merged, out)
-      (lonelyUp.value, lonelyDel.value)
-    } else {
-      // window formulation: one bin per task (exact-placement keys), so
-      // partitionBy(__bk) is satisfied by the exchange above and the
-      // window's (__bk, doc_id, prio desc) sort IS the output clustering
-      val w = Window.partitionBy(col("__bk"))
-        .orderBy(col("doc_id").asc, col("prio").desc)
-      val marked = binned
-        .withColumn("__prev", lag(col("doc_id"), 1).over(w))
-        .withColumn("__next", lead(col("doc_id"), 1).over(w))
-        .withColumn("__first",
-          col("__prev").isNull || col("__prev") =!= col("doc_id"))
-        .withColumn("__lonely",
-          col("__first") && col("prio") >= 1 &&
-            (col("__next").isNull || col("__next") =!= col("doc_id")))
-      val obs = Observation()
-      val merged = marked.observe(obs,
-          sum(when(col("__lonely") && col("prio") === 1, 1L).otherwise(0L)).as("lu"),
-          sum(when(col("__lonely") && col("prio") === 2, 1L).otherwise(0L)).as("ld"))
-        .filter(col("__first") && col("prio") =!= 2)
-        .drop("__bk", "__prev", "__next", "__first", "__lonely", "prio")
-      TokenTable.writeData(merged, out)
-      def metric(k: String): Long = obs.get.get(k) match {
-        case Some(l: Long) => l
-        case _ => 0L
-      }
-      (metric("lu"), metric("ld"))
+    // one bin per task (exact-placement keys), so partitionBy(__bk) is
+    // satisfied by the exchange above and the window's
+    // (__bk, doc_id, prio desc) sort IS the output clustering
+    val w = Window.partitionBy(col("__bk"))
+      .orderBy(col("doc_id").asc, col("prio").desc)
+    val marked = binned
+      .withColumn("__prev", lag(col("doc_id"), 1).over(w))
+      .withColumn("__next", lead(col("doc_id"), 1).over(w))
+      .withColumn("__first",
+        col("__prev").isNull || col("__prev") =!= col("doc_id"))
+      .withColumn("__lonely",
+        col("__first") && col("prio") >= 1 &&
+          (col("__next").isNull || col("__next") =!= col("doc_id")))
+    val obs = Observation()
+    val merged = marked.observe(obs,
+        sum(when(col("__lonely") && col("prio") === 1, 1L).otherwise(0L)).as("lu"),
+        sum(when(col("__lonely") && col("prio") === 2, 1L).otherwise(0L)).as("ld"))
+      .filter(col("__first") && col("prio") =!= 2)
+      .drop("__bk", "__prev", "__next", "__first", "__lonely", "prio")
+    TokenTable.writeData(merged, out)
+    def metric(k: String): Long = obs.get.get(k) match {
+      case Some(l: Long) => l
+      case _ => 0L
     }
+    (metric("lu"), metric("ld"))
   }
 
   /**
@@ -640,16 +575,8 @@ object Merge {
    */
   private[graft] def broadcastMergeWrite(target: DataFrame, srcU: DataFrame,
       files: Seq[DataFile], targetBytes: Long, out: Path,
-      keyMap: Option[Broadcast[java.util.HashMap[UTF8String, UTF8String]]] = None,
-      upsertRows: Long = -1L)
-      : Long = {
-    val spark = target.sparkSession
-    val bc = keyMap.getOrElse {
-      val m = KeyMapCode.buildMap(
-        srcU.select(col("doc_id"), col("source")).collect()
-          .iterator.map(r => (r.getString(0), r.getString(1))))
-      spark.sparkContext.broadcast(m)
-    }
+      keyMap: Broadcast[java.util.HashMap[UTF8String, UTF8String]],
+      upsertRows: Long): Long = {
     // evolved columns ride through on kept target rows; change rows
     // supply them when present, else null (see fusedMergeWrite)
     val extras = extraColumns(target)
@@ -661,18 +588,16 @@ object Merge {
         }: _*)
     val obs = Observation()
     val kept = target
-      .withColumn("__mc", KeyMapCode.of(col("doc_id"), col("source"), bc))
+      .withColumn("__mc", KeyMapCode.of(col("doc_id"), col("source"), keyMap))
       .observe(obs,
         sum(when(col("__mc") === 2, 1L).otherwise(0L)).as("conflicts"))
       .filter(col("__mc") === 0)
       .drop("__mc")
     // the small side gets its own bounded shuffle into ~targetBytes
     // range-clustered files (doc_id-sorted within each) so its manifest
-    // stats prune; row count comes from the caller's planning summary —
-    // only the spec-facing direct call pays a count job
-    val nUp = if (upsertRows >= 0) upsertRows else upserts.count()
+    // stats prune; its row count comes from the planning summary
     val merged =
-      if (nUp == 0) kept
+      if (upsertRows == 0) kept
       else {
         val avgRowBytes = {
           val tb = files.iterator.map(_.bytes).sum
@@ -680,7 +605,7 @@ object Merge {
           if (tr == 0) 256L else math.max(16L, tb / tr)
         }
         val nOut = math.max(1,
-          math.ceil(nUp.toDouble * avgRowBytes / targetBytes).toInt)
+          math.ceil(upsertRows.toDouble * avgRowBytes / targetBytes).toInt)
         kept.unionByName(upserts
           .repartition(nOut, pmod(xxhash64(col("doc_id")), lit(nOut)))
           .sortWithinPartitions(col("source"), col("doc_id")))
@@ -729,25 +654,15 @@ object Merge {
       .drop("s_op")
   }
 
-  /**
-   * Execute the merge against the current snapshot.
-   * @param source change-set DataFrame (doc_id, tokens, n_tok, source, _op)
-   */
-  private val debug = sys.env.get("SPARK_GRAFT_DEBUG").contains("1")
-  private def timed[A](tag: String)(f: => A): A =
-    if (!debug) f else {
-      val t0 = System.nanoTime(); val a = f
-      println(f"[merge-dbg] $tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      a
-    }
-
   /** Change-sets with at most this many deduped rows take the
     * broadcast key-map path (the common "CDC batch into a huge table"
     * shape): ~60 B of key+source per row → bounded driver/broadcast
     * footprint. Larger sources use the general fused run-scan. */
   val BroadcastSourceRows: Long = 1200000L
 
-  /** @param sourceKeysUnique caller GUARANTEES the change-set has at most
+  /** Execute the merge against the current snapshot.
+    * @param source change-set DataFrame (doc_id, tokens, n_tok, source, _op)
+    * @param sourceKeysUnique caller GUARANTEES the change-set has at most
     *   one row per doc_id, so the deterministic dedup window (a full
     *   shuffle of the change-set — guide §2.4: a distinct on already-
     *   unique data) is skipped. Safe only where uniqueness is structural:
@@ -775,7 +690,7 @@ object Merge {
       // reuses stale staged output — ADVICE r1 #1); the cells drive
       // touched-file stabbing and insert sizing; the key map feeds the
       // broadcast path's codegen probe.
-      var plan = timed("planSummary")(planSummary(src, broadcastThreshold))
+      var plan = planSummary(src, broadcastThreshold)
       // TRUST-BUT-VERIFY the sourceKeysUnique claim where it is free: on
       // the small path the planning collect builds the doc_id key map, so
       // keyMap.size < srcRows proves duplicate keys (e.g. the table
@@ -787,8 +702,7 @@ object Merge {
       if (sourceKeysUnique && plan.keyMap.exists(_.size < plan.srcRows)) {
         src.unpersist()
         src = dedupSource(source).cache()
-        plan = timed("planSummary-dedup-fallback")(
-          planSummary(src, broadcastThreshold))
+        plan = planSummary(src, broadcastThreshold)
       }
       val cellChars = plan.cellChars
       // path choice is a pure function of the change-set content and the
@@ -840,7 +754,7 @@ object Merge {
       val insRows = plan.cells match {
         case Some(st) => st.iterator.filter(s => outsideUnits(s.cell))
           .map(_.nUpserts).sum
-        case None => timed("insert-count")(insDF.count())
+        case None => insDF.count()
       }
       // every unit thunk returns (staged dir, its footer-statted manifest
       // entries): entry collection overlaps other units' Spark jobs
@@ -871,54 +785,50 @@ object Merge {
             Some(e)
         }
       def runUnit(u: MergeUnit): (Path, Seq[DataFile]) =
-        timed(s"unit ${u.key} files=${u.files.size}") {
-          done.get(u.key) match {
-            case Some(rec) =>
-              entriesOf(table.log.absolute(rec.filesOut.head))
-            case None =>
-              // snapshot schema, not the fixed base: rewrites must CARRY
-              // evolved (addColumn) columns; pre-evolution files read null
-              val scan = spark.read.schema(table.schemaOf(snap))
-                .parquet(u.files.map(f => table.log.absolute(f.path).toString): _*)
-              // confine to the unit's range: a file crossing a split cut
-              // is scanned by both neighbors, each keeping its own rows
-              val target = unitRangeFilter(u, cellChars)
-                .map(scan.filter).getOrElse(scan)
-              val outDir = table.log.newDataSubdir()
-              lin.heartbeat(passId)
-              if (useBroadcast) {
-                // unit upsert count from the planning summary — no count job
-                val unitUpserts = plan.cells match {
-                  case Some(st) => st.iterator
-                    .filter(s => s.cell >= u.lo && s.cell <= u.hi)
-                    .map(_.nUpserts).sum
-                  case None => -1L
-                }
-                val conflicts = broadcastMergeWrite(target,
-                  src.filter(unitOf === u.id), u.files, targetFileBytes,
-                  outDir, keyMapBc, unitUpserts)
-                // abort BEFORE the unit's lineage record: the violating
-                // staged output must never be reusable by a resume (the
-                // corrected change-set has a different fingerprint and
-                // pass id anyway; the dir is swept as an orphan)
-                if (conflicts > 0)
-                  throw new MergeContractViolation(
-                    s"merge aborted before commit: $conflicts change row(s) " +
-                    "in unit " + u.key + " carry a different `source` than " +
-                    "the stored row (provenance is immutable; re-submit " +
-                    "with the keys' stored sources, or delete-then-upsert " +
-                    "to move a document between sources)")
-              } else {
-                val (lu, ld) = fusedMergeWrite(target,
-                  src.filter(unitOf === u.id), u.files, targetFileBytes, outDir)
-                lonelyUp.addAndGet(lu); lonelyDel.addAndGet(ld)
-              }
-              val e = entriesOf(outDir)
-              lin.append(LineageRecord(passId, "merge", u.key, "done",
-                u.files.size, Seq(table.log.relativize(outDir)),
-                u.rows, u.bytes, 1))
-              e
-          }
+        done.get(u.key) match {
+          case Some(rec) =>
+            entriesOf(table.log.absolute(rec.filesOut.head))
+          case None =>
+            // snapshot schema, not the fixed base: rewrites must CARRY
+            // evolved (addColumn) columns; pre-evolution files read null
+            val scan = spark.read.schema(table.schemaOf(snap))
+              .parquet(u.files.map(f => table.log.absolute(f.path).toString): _*)
+            // confine to the unit's range: a file crossing a split cut
+            // is scanned by both neighbors, each keeping its own rows
+            val target = unitRangeFilter(u, cellChars)
+              .map(scan.filter).getOrElse(scan)
+            val outDir = table.log.newDataSubdir()
+            lin.heartbeat(passId)
+            if (useBroadcast) {
+              // unit upsert count from the planning summary — no count
+              // job (the collect plan that enables this path has cells)
+              val unitUpserts = plan.cells.get.iterator
+                .filter(s => s.cell >= u.lo && s.cell <= u.hi)
+                .map(_.nUpserts).sum
+              val conflicts = broadcastMergeWrite(target,
+                src.filter(unitOf === u.id), u.files, targetFileBytes,
+                outDir, keyMapBc.get, unitUpserts)
+              // abort BEFORE the unit's lineage record: the violating
+              // staged output must never be reusable by a resume (the
+              // corrected change-set has a different fingerprint and
+              // pass id anyway; the dir is swept as an orphan)
+              if (conflicts > 0)
+                throw new MergeContractViolation(
+                  s"merge aborted before commit: $conflicts change row(s) " +
+                  "in unit " + u.key + " carry a different `source` than " +
+                  "the stored row (provenance is immutable; re-submit " +
+                  "with the keys' stored sources, or delete-then-upsert " +
+                  "to move a document between sources)")
+            } else {
+              val (lu, ld) = fusedMergeWrite(target,
+                src.filter(unitOf === u.id), u.files, targetFileBytes, outDir)
+              lonelyUp.addAndGet(lu); lonelyDel.addAndGet(ld)
+            }
+            val e = entriesOf(outDir)
+            lin.append(LineageRecord(passId, "merge", u.key, "done",
+              u.files.size, Seq(table.log.relativize(outDir)),
+              u.rows, u.bytes, 1))
+            e
         }
       // merge units AND the insert unit share ONE bounded pool: the insert
       // write overlaps the unit jobs instead of trailing them serially

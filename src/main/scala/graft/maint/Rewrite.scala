@@ -376,34 +376,16 @@ object Rewrite {
           }
           val out = table.log.newDataSubdir()
           lin.heartbeat(pid)
-          // WITHIN-file ordering is conditional on file geometry: file-level
-          // min/max stats — what the manifest-pruned scan reads — are fixed
-          // by the RangeBin assignment alone, so sorting inside a bin only
-          // buys finer skipping when a file spans MULTIPLE parquet row
-          // groups (1 GB files / 32 MB groups at 100 TB: sort kept, row
-          // groups prune). When target <= ~1.5 row groups each file IS one
-          // row group and the sort moves every payload byte through the
-          // sorter for zero pruning gain — measured as the difference
-          // between the zorder stage and its no-write scan probe ceiling.
-          val rowGroupBytes = spark.sessionState.newHadoopConf()
-            .getLong("parquet.block.size", 128L * 1024 * 1024)
-          // graft.cluster.sort / SPARK_GRAFT_CLUSTER_SORT: always | never |
-          // auto (geometry rule above) — the prop form exists so an A/B
-          // harness can flip it between passes inside one JVM
-          val doSort = sys.props.get("graft.cluster.sort")
-            .orElse(sys.env.get("SPARK_GRAFT_CLUSTER_SORT")) match {
-            case Some("always") => true
-            case Some("never") => false
-            case _ => cfg.targetFileBytes > rowGroupBytes * 3 / 2
-          }
+          // no within-file sort: file-level min/max stats — what the
+          // manifest-pruned scan reads — are fixed by the RangeBin
+          // assignment alone, and a sort inside a bin pays off only for
+          // row-group pruning inside multi-row-group files, which no
+          // workload measures
           val binned = spark.read.schema(table.schemaOf(snap)).parquet(paths: _*)
             .withColumn("__sk", key)
             .withColumn("__bk", binCol)
             .repartition(base, col("__bk"))
-          val clustered =
-            if (doSort) binned.sortWithinPartitions(col("__sk"))
-            else binned
-          TokenTable.writeData(clustered.drop("__sk", "__bk"), out)
+          TokenTable.writeData(binned.drop("__sk", "__bk"), out)
           val entries = table.collectEntries(out)
           lin.append(LineageRecord(pid, op, gKey, "done",
             grp.map(_._2.size).sum, Seq(table.log.relativize(out)),

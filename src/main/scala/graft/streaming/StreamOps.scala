@@ -35,11 +35,9 @@ object StreamOps {
     * session default (`spark.sql.shuffle.partitions` = core count in the
     * bench) would spin up one HDFS-backed state store instance per
     * shuffle partition and pay its snapshot/commit file per micro-batch.
-    * This is a per-stream volume knob, not a local-mode constant: size it
-    * to the stream's key cardinality in production (round 6; measured
-    * 32 → 8 saves ~0.9 s/query at sf0.1). */
-  private def streamStateParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8")
+    * Sized to the stream's key cardinality, not to the core count
+    * (round 6; measured 32 → 8 saves ~0.9 s/query at sf0.1). */
+  private val StreamStateParts = "8"
 
   /** Windowed count per (1-day event-time window, event_type), computed by
     * an actual streaming query over the parquet file source in APPEND
@@ -80,7 +78,7 @@ object StreamOps {
     // SQLConf + temp views): the state-partition knob never leaks to the
     // caller's session, even under concurrent use
     val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", streamStateParts)
+    s2.conf.set("spark.sql.shuffle.partitions", StreamStateParts)
     locally {
       val stream = s2.readStream
         .schema(eventsSchema)

@@ -102,22 +102,25 @@ class ClusterSpec extends SparkTestBase {
   }
 
   test("cluster pruning surface is invariant under the within-file sort mode") {
-    // The geometry-conditional sort (Rewrite.cluster) must not be able to
-    // change what any scan skips: per-file manifest stats come from the
-    // RangeBin assignment, not row order. Cluster the SAME data with the
-    // sort forced ON and OFF and require identical per-file (partition,
-    // rows, stats) manifests and equal content fingerprints.
+    // The parquet row-group size must not be able to change what any scan
+    // skips: per-file manifest stats come from the RangeBin assignment,
+    // not from the row-group layout inside a file. Cluster the SAME data
+    // with 128 KB row groups (the 256 KB target spans two) and with the
+    // default 128 MB ones, and require identical per-file (partition,
+    // rows, stats) manifests and equal content fingerprints. Rewrite.cluster
+    // has no within-file sort, so row order is the exchange's either way.
     import graft.gen.Synth
     import graft.maint.{Rewrite, RewriteConfig}
-    def build(mode: String): (Seq[(String, Long, Map[String, String])], java.math.BigDecimal) = {
-      val root = tmpDir(s"graft-sortmode-$mode")
+    def build(rowGroupBytes: Option[Long])
+        : (Seq[(String, Long, Map[String, String])], java.math.BigDecimal) = {
+      val root = tmpDir(s"graft-sortmode-${rowGroupBytes.getOrElse("default")}")
       val t = TokenTable.create(root, spark)
       t.append(Synth.table(spark, 8000, seed = 7L, minTok = 16, maxTok = 128),
         targetFileCount = 24, nowMs = 1L)
-      sys.props("graft.cluster.sort") = mode
+      rowGroupBytes.foreach(b => spark.conf.set("parquet.block.size", b.toString))
       try Rewrite.cluster(t, spark,
         RewriteConfig(targetFileBytes = 256L * 1024, sortBy = "zkey"), nowMs = 2L)
-      finally sys.props.remove("graft.cluster.sort")
+      finally spark.conf.unset("parquet.block.size")
       val snap = t.log.current().get
       val files = t.log.dataFiles(snap).map { f =>
         (f.partition.getOrElse("source", ""), f.rows,
@@ -126,16 +129,13 @@ class ClusterSpec extends SparkTestBase {
           })
       }.sortBy(f => (f._1, f._3.toSeq.sorted.mkString("|"), f._2))
       val fp = t.scan()._1
-        .select(org.apache.spark.sql.functions.xxhash64(
-            org.apache.spark.sql.functions.col("doc_id"),
-            org.apache.spark.sql.functions.col("tokens"))
-          .cast("decimal(38,0)").as("h"))
-        .agg(org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.col("h")))
+        .select(xxhash64(col("doc_id"), col("tokens")).cast("decimal(38,0)").as("h"))
+        .agg(sum(col("h")))
         .collect()(0).getDecimal(0)
       (files, fp)
     }
-    val (fa, fpa) = build("always")
-    val (fn, fpn) = build("never")
+    val (fa, fpa) = build(Some(128L * 1024))
+    val (fn, fpn) = build(None)
     assert(fpa === fpn)
     assert(fa === fn)
   }

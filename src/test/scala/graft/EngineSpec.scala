@@ -146,11 +146,9 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("merge plan uses SortMergeJoin on doc_id") {
-    val t = currentDf.select(col("doc_id"), col("tokens"))
-    val s = Synth.changeSet(spark, 1000, 42L, 50, 20, 10, 16, 64)
-      .select(col("doc_id").as("s_doc_id"))
-    val plan = t.hint("merge")
-      .join(s.hint("merge"), col("doc_id") === col("s_doc_id"), "full_outer")
+    // the reference formulation the execution paths are checked against
+    val changes = Synth.changeSet(spark, 1000, 42L, 50, 20, 10, 16, 64)
+    val plan = Merge.mergeFrames(currentDf, changes)
       .queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), plan)
   }
@@ -173,9 +171,13 @@ class EngineSpec extends SparkTestBase {
       .parquet(out.toString)
     assert(fused.count() === smj.count())
     assert(fingerprint(fused) === fingerprint(smj))
-    // the small-source broadcast-anti path must agree as well
+    // the small-source broadcast-anti path must agree as well, fed the
+    // key map and upsert count the production planner derives
+    val plan = Merge.planSummary(changes, Merge.BroadcastSourceRows)
     val out2 = t.log.newDataSubdir()
-    Merge.broadcastMergeWrite(target, changes, files, 1L * 1024 * 1024, out2)
+    Merge.broadcastMergeWrite(target, changes, files, 1L * 1024 * 1024, out2,
+      spark.sparkContext.broadcast(plan.keyMap.get),
+      plan.cells.get.iterator.map(_.nUpserts).sum)
     val bc = spark.read.schema(TokenRow.schema).parquet(out2.toString)
     assert(bc.count() === smj.count())
     assert(fingerprint(bc) === fingerprint(smj))
