@@ -660,28 +660,23 @@ object Merge {
     * footprint. Larger sources use the general fused run-scan. */
   val BroadcastSourceRows: Long = 1200000L
 
-  /** Execute the merge against the current snapshot.
-    * @param source change-set DataFrame (doc_id, tokens, n_tok, source, _op)
-    * @param sourceKeysUnique caller GUARANTEES the change-set has at most
-    *   one row per doc_id, so the deterministic dedup window (a full
-    *   shuffle of the change-set — guide §2.4: a distinct on already-
-    *   unique data) is skipped. Safe only where uniqueness is structural:
-    *   the SQL DELETE/UPDATE commands derive their change rows from the
-    *   head scan, whose doc_id uniqueness is the engine's maintained
-    *   post-merge invariant. The pass-id fingerprint is a SUM of row
-    *   hashes (order-independent) and dedup of unique keys is the
-    *   identity, so resume ids are unchanged either way. */
+  /** Execute the merge against the current snapshot. The change-set is
+    * always deduped first (`dedupSource`: at most one action per doc_id,
+    * delete wins, then least token fingerprint), so duplicate keys in
+    * `source` resolve deterministically and the table stays key-unique.
+    * SQL DELETE/UPDATE do not come through here: they are predicate
+    * copy-on-write (`sources.GraftRowLevel`).
+    * @param source change-set DataFrame (doc_id, tokens, n_tok, source, _op) */
   def run(table: TokenTable, spark: SparkSession, source: DataFrame,
       nowMs: Long = 0L,
       targetFileBytes: Long = 128L * 1024 * 1024,
       broadcastThreshold: Long = BroadcastSourceRows,
-      unitTargetBytes: Long = UnitTargetBytes,
-      sourceKeysUnique: Boolean = false): Snapshot = {
+      unitTargetBytes: Long = UnitTargetBytes): Snapshot = {
     val snap = table.log.current().getOrElse(sys.error("empty table"))
     val files = table.log.dataFiles(snap)
     val lin = new LineageLog(table.root)
 
-    var src = (if (sourceKeysUnique) source else dedupSource(source)).cache()
+    val src = dedupSource(source).cache()
     try {
       // Planning: exact count + one narrow collect (small sources;
       // bounded aggregation otherwise).
@@ -690,20 +685,7 @@ object Merge {
       // reuses stale staged output — ADVICE r1 #1); the cells drive
       // touched-file stabbing and insert sizing; the key map feeds the
       // broadcast path's codegen probe.
-      var plan = planSummary(src, broadcastThreshold)
-      // TRUST-BUT-VERIFY the sourceKeysUnique claim where it is free: on
-      // the small path the planning collect builds the doc_id key map, so
-      // keyMap.size < srcRows proves duplicate keys (e.g. the table
-      // itself violates doc_id uniqueness after raw appends and a DML
-      // change-set inherited the duplicates). Fall back to the dedup
-      // window — the exact pre-optimization semantics. The aggregation
-      // (big-source) path cannot check without an extra job; there the
-      // caller's structural guarantee stands.
-      if (sourceKeysUnique && plan.keyMap.exists(_.size < plan.srcRows)) {
-        src.unpersist()
-        src = dedupSource(source).cache()
-        plan = planSummary(src, broadcastThreshold)
-      }
+      val plan = planSummary(src, broadcastThreshold)
       val cellChars = plan.cellChars
       // path choice is a pure function of the change-set content and the
       // threshold, and it is FOLDED INTO the pass id (ADVICE r3 #3): a
