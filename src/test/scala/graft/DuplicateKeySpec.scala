@@ -64,7 +64,7 @@ class DuplicateKeySpec extends SparkTestBase {
     assert(facts(t.scan()._1) === expected)
   }
 
-  test("Merge.run dedups duplicate-key change-sets deterministically; keys stay unique") {
+  test("Merge.run dedups duplicate-key change-sets deterministically; keys unique") {
     def fresh(tag: String): TokenTable = {
       val t = TokenTable.create(tmpDir(s"graft-dupkey-$tag"), spark)
       t.append(base, targetFileCount = 8, nowMs = 1L)
