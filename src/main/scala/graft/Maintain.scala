@@ -58,12 +58,14 @@ object Maintain {
       // vectors per task plus doubling-growth churn; 1024 keeps 32
       // concurrent fused read+write tasks inside the heap
       .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
-      // Every engine write is already source-clustered per task: range
-      // exchanges use exact-placement keys, and a copy-forward merge task
-      // reads whole partition-pure files, so its rows arrive in runs of
-      // one source. The dynamic-partition writer's sort — which
-      // MATERIALIZES each task's whole input before writing and spilled
-      // GBs at 32 cores — buys nothing there: concurrent writers bound
+      // Every engine write is already source-clustered per task: bin
+      // exchanges place each partition-pure bin in its own task
+      // (`repartitionById`), and a copy-forward merge task reads whole
+      // partition-pure files, so its rows arrive in runs of one source.
+      // The dynamic-partition writer's sort — which MATERIALIZES each
+      // task's whole input before writing and spilled GBs at 32 cores —
+      // buys nothing there, and skipping it keeps a task's own order (the
+      // compaction doc_id sort) in the files: concurrent writers bound
       // memory at writers × block.size instead. Scans keep Spark's 4 MB
       // open cost, which packs small files into ≤ maxPartitionBytes
       // splits (one task per file made a 20-row DELETE run ~100-200

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.meta._
@@ -234,9 +235,9 @@ final class TokenTable(val log: SnapshotLog, spark: SparkSession) {
       val partition = pp.getParent.getFileName.toString match {
         case s if s.contains("=") =>
           val Array(k, v) = s.split("=", 2)
-          // hive-style dir values are %-escaped by the writer; decode with
-          // URI PATH semantics — a literal '+' must stay '+' (ADVICE r4 #2)
-          Map(k.stripPrefix("p_") -> SnapshotLog.uriPathDecode(v))
+          // hive-style dir values are %-escaped by the writer's
+          // escapePathName; a literal '+' stays '+' (ADVICE r4 #2)
+          Map(k.stripPrefix("p_") -> ExternalCatalogUtils.unescapePathName(v))
         case _ => Map.empty[String, String]
       }
       DataFile(log.relativize(pp), partition, rows, bytes, stats)

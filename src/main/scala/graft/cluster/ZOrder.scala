@@ -1,6 +1,6 @@
 package graft.cluster
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /**
@@ -38,25 +38,11 @@ object ZOrder {
     e.bitwiseOR(shiftleft(e, 2)).bitwiseAND(lit(0x1249249249249249L))
   }
 
-  /** Spread the low 32 bits of x to even positions (Morton "part1by1"). */
-  def part1by1(x: Column): Column = {
-    val a = x.bitwiseAND(lit(0xffffffffL))
-    val b = a.bitwiseOR(shiftleft(a, 16)).bitwiseAND(lit(0x0000ffff0000ffffL))
-    val c = b.bitwiseOR(shiftleft(b, 8)).bitwiseAND(lit(0x00ff00ff00ff00ffL))
-    val d = c.bitwiseOR(shiftleft(c, 4)).bitwiseAND(lit(0x0f0f0f0f0f0f0f0fL))
-    val e = d.bitwiseOR(shiftleft(d, 2)).bitwiseAND(lit(0x3333333333333333L))
-    e.bitwiseOR(shiftleft(e, 1)).bitwiseAND(lit(0x5555555555555555L))
-  }
-
   /** Interleave 3 dims (≤21 bits each) into one Z key. */
   def interleave3(d0: Column, d1: Column, d2: Column): Column =
     part1by2(d0)
       .bitwiseOR(shiftleft(part1by2(d1), 1))
       .bitwiseOR(shiftleft(part1by2(d2), 2))
-
-  /** Interleave 2 dims (≤32 bits each) into one Z key. */
-  def interleave2(d0: Column, d1: Column): Column =
-    part1by1(d0).bitwiseOR(shiftleft(part1by1(d1), 1))
 
   /** Reference scalar implementation (for property tests): interleave the
     * low `bits` bits of each dim, dim 0 in the lowest position. */
@@ -110,10 +96,6 @@ object ZOrder {
   /** The engine's Z key over (source, n_tok, doc_id). */
   def zkey(source: Column, nTok: Column, docId: Column, dict: Seq[String]): Column =
     interleave3(sourceBucket(source, dict), ntokBucket(nTok), docBucket(docId))
-
-  /** Convenience: attach zkey to a TokenRow-shaped frame. */
-  def withZKey(df: DataFrame, dict: Seq[String]): DataFrame =
-    df.withColumn("zkey", zkey(col("source"), col("n_tok"), col("doc_id"), dict))
 }
 
 /**

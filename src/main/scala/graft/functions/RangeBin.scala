@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.{lit, when}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,8 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * `lookup(v)` = number of boundaries <= v, i.e. bin i covers
  * [bounds(i-1), bounds(i)). When `keys` is non-empty it maps the bin index
- * to a precomputed partition key (see `ExactPartition`) so a plain
- * hash `repartition(n, col)` places each bin in exactly one output task.
+ * to another id (`Merge.routing` maps bins to merge unit ids).
  */
 case class RangeBin(child: Expression, boundaries: Array[Long], keys: Array[Int])
     extends UnaryExpression {
@@ -66,6 +66,22 @@ object RangeBin {
   def bin(c: Column, boundaries: Array[Long],
       keys: Array[Int] = Array.empty): Column =
     Bridge.column(RangeBin(Bridge.expression(c.cast("long")), boundaries, keys))
+
+  /** Bin ids for rows ranged by `v` inside each source: every listed
+    * source's range bins take the next `bounds.length + 1` consecutive ids,
+    * in list order, and rows of any other source take the last id. The ids
+    * cover [0, n), so `repartitionById(n, bin)` writes each bin in its own
+    * task. Returns (bin column, n). */
+  def bySource(source: Column, v: Column,
+      pieces: Seq[(String, Array[Long])]): (Column, Int) = {
+    val first = pieces.scanLeft(0)(_ + _._2.length + 1)
+    val other = first.last
+    val ids = pieces.zip(first).foldLeft(lit(other)) {
+      case (acc, ((s, bounds), b0)) =>
+        when(source === s, bin(v, bounds) + b0).otherwise(acc)
+    }
+    (ids, other + 1)
+  }
 }
 
 /**

@@ -93,32 +93,18 @@ object Synth {
    */
   def tableDistributed(spark: SparkSession, rows: Long, seed: Long = 42L,
       files: Int = 256, minTok: Int = 16, maxTok: Int = 2048): DataFrame = {
-    import graft.maint.ExactPartition
-    import graft.functions.RangeBin
     val space = 1L << 28 // 16^7 values of the 7-hex-char doc_id prefix
     val widths = sourceCdf.zip(0 +: sourceCdf.map(_._2).init)
       .map { case ((label, cum), prev) => (label, cum - prev) }
-    val nOf = widths.map { case (label, w) =>
-      (label, math.max(1, math.round(files * w / 1000.0).toInt)) }
-    val total = nOf.map(_._2).sum
-    val pkeys = ExactPartition.keys(total)
-    val hexv = conv(substring(col("doc_id"), 1, 7), 16, 10).cast("long")
-    var base = 0
-    val pieces = nOf.map { case (label, n) =>
-      val bounds = Array.tabulate(n - 1)(k => (k + 1).toLong * space / n)
-      val piece = (label, base, bounds)
-      base += n
-      piece
+    val pieces = widths.map { case (label, w) =>
+      val n = math.max(1, math.round(files * w / 1000.0).toInt)
+      label -> Array.tabulate(n - 1)(k => (k + 1).toLong * space / n)
     }
-    val binCol = pieces.foldLeft(lit(pkeys(0)): Column) {
-      case (acc, (label, b0, bounds)) =>
-        when(col("source") === label,
-          RangeBin.bin(hexv, bounds, pkeys.slice(b0, b0 + bounds.length + 1)))
-          .otherwise(acc)
-    }
+    val (binCol, nBins) = graft.functions.RangeBin.bySource(col("source"),
+      conv(substring(col("doc_id"), 1, 7), 16, 10).cast("long"), pieces)
     val narrow = tableNarrow(spark, rows, seed, minTok, maxTok)
       .withColumn("__bk", binCol)
-      .repartition(total, col("__bk"))
+      .repartitionById(nBins, col("__bk"))
       .drop("__bk")
     withTokens(narrow, seed).select("doc_id", "tokens", "n_tok", "source")
   }

@@ -137,9 +137,6 @@ object Merge {
     * parallel Spark job; a handful in flight keeps all slots busy). */
   val UnitPool = 8
 
-  /** Max positive prefix code for 7 ASCII bytes (stats-missing fallback). */
-  private val MaxCode7 = 0x7f7f7f7f7f7f7fL
-
   /** Change-set columns beyond the base (TokenRow + op) shape — evolved
     * (addColumn) columns the caller supplies. Sorted for a deterministic
     * fingerprint/ordering regardless of the caller's select order. */
@@ -425,32 +422,18 @@ object Merge {
     (bounds.toArray, keys.toArray)
   }
 
-  /** (source, doc_id-range) bin expression from the unit's own manifest
-    * stats: boundaries on the driver, values are exact-placement partition
-    * keys (see ExactPartition). Returns (column, totalBins). */
+  /** (source, doc_id-range) bin ids from the unit's own manifest stats:
+    * boundaries on the driver, one id per bin (`RangeBin.bySource`); a
+    * change row of a source absent from the unit's files gets the last
+    * id. Returns (column, totalBins). */
   private def binColumn(files: Seq[DataFile], targetBytes: Long): (Column, Int) = {
     val bySource = files.groupBy(_.partition.getOrElse("source", ""))
-    val sources = bySource.keys.toSeq.sorted
-    val enc7 = PrefixCode.code(col("doc_id"), 7)
-    var base = 0
-    val pieces = sources.map { s =>
-      val spans = bySource(s).map { f =>
-        val (lo, hi) = spanOf(f, 7); (lo, hi, f.bytes)
-      }
-      val b = Boundaries.fromFileStats(spans, targetBytes)
-      val piece = (s, base, b)
-      base += b.length + 1
-      piece
-    }
-    val totalBins = base + 1 // +1 overflow bin for sources unseen in stats
-    val pk = ExactPartition.keys(totalBins)
-    val bin = pieces.foldLeft(lit(pk(totalBins - 1)): Column) {
-      case (acc, (s, b0, bnds)) =>
-        when(col("source") === s,
-          RangeBin.bin(enc7, bnds, pk.slice(b0, b0 + bnds.length + 1)))
-          .otherwise(acc)
-    }
-    (bin, totalBins)
+    RangeBin.bySource(col("source"), PrefixCode.code(col("doc_id"), 7),
+      bySource.keys.toSeq.sorted.map { s =>
+        s -> Boundaries.fromFileStats(bySource(s).map { f =>
+          val (lo, hi) = spanOf(f, 7); (lo, hi, f.bytes)
+        }, targetBytes)
+      })
   }
 
   /** Evolved (addColumn) fields present in a unit scan beyond the base
@@ -464,7 +447,8 @@ object Merge {
   /**
    * FUSED sorted-merge: the unit's target files and its source slice are
    * unioned (tagged with an action priority), range-binned ONCE into the
-   * final output layout, sorted within each bin by (doc_id, prio desc),
+   * final output layout (`repartitionById` on the bin id, one bin per
+   * task), sorted within each bin by (doc_id, prio desc),
    * and merged by keeping each doc_id run's highest-priority row (dropping
    * the run when that row is a delete).
    *
@@ -512,10 +496,10 @@ object Merge {
     val all = t.unionByName(s)
     val (binCol, totalBins) = binColumn(files, targetBytes)
     val binned = all.withColumn("__bk", binCol)
-      .repartition(totalBins, col("__bk"))
-    // one bin per task (exact-placement keys), so partitionBy(__bk) is
-    // satisfied by the exchange above and the window's
-    // (__bk, doc_id, prio desc) sort IS the output clustering
+      .repartitionById(totalBins, col("__bk"))
+    // one bin per task, so partitionBy(__bk) is satisfied by the exchange
+    // above and the window's (__bk, doc_id, prio desc) sort IS the output
+    // clustering
     val w = Window.partitionBy(col("__bk"))
       .orderBy(col("doc_id").asc, col("prio").desc)
     val marked = binned

@@ -40,26 +40,6 @@ object Packer {
   }
 }
 
-/**
- * Finds, for each target shuffle-partition index j, an int key whose
- * Murmur3 hash lands exactly on j under `repartition(n, $"k")`. This lets
- * the FFD plan place each bin in exactly one shuffle partition — exact
- * bin→output-file placement with a plain DataFrame hash repartition, no
- * RDD custom partitioner. Cost: O(n ln n) driver-side hash probes.
- */
-object ExactPartition {
-  def keyFor(j: Int, n: Int): Int = {
-    var k = 0
-    while (true) {
-      val h = org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(k, 42)
-      if (java.lang.Math.floorMod(h, n) == j) return k
-      k += 1
-    }
-    -1
-  }
-  def keys(n: Int): Array[Int] = Array.tabulate(n)(keyFor(_, n))
-}
-
 /** Bounded concurrent execution of per-group maintenance units. Each
   * unit is one Spark job; submitting several keeps all executor slots busy
   * when individual groups are smaller than the cluster (Spark's scheduler
@@ -87,8 +67,6 @@ object Concurrency {
 
 final case class RewriteConfig(
     targetFileBytes: Long = 128L * 1024 * 1024,
-    /** files smaller than this are compaction victims (default 3/4 target) */
-    minFileBytes: Long = -1,
     /** zkey | hilbert | docid | none */
     sortBy: String = "docid",
     /** ~input bytes per Spark job (resume/checkpoint granularity). One job
@@ -98,7 +76,8 @@ final case class RewriteConfig(
       * crash-resume (a died job re-runs at most this many bytes). Default
       * 64 × targetFileBytes. */
     jobGroupBytes: Long = -1) {
-  def minBytes: Long = if (minFileBytes > 0) minFileBytes else targetFileBytes * 3 / 4
+  /** files smaller than this are compaction victims */
+  def minBytes: Long = targetFileBytes * 3 / 4
   def groupBytes: Long = if (jobGroupBytes > 0) jobGroupBytes else targetFileBytes * 64
 }
 
@@ -140,7 +119,7 @@ object Rewrite {
 
   /** Deterministic pass id: operation + base snapshot version + a hash of
     * every LAYOUT-AFFECTING config knob (ADVICE r3 #2: group membership
-    * depends on jobGroupBytes/targetFileBytes/minFileBytes/sortBy, so a
+    * depends on jobGroupBytes/targetFileBytes/sortBy, so a
     * crash-resume at the same snapshot with a DIFFERENT config must get a
     * fresh pass id — reusing a `done` record whose staged output covers a
     * different file set than the re-planned group would silently lose the
@@ -172,9 +151,9 @@ object Rewrite {
   /**
    * Bin-packing compaction. Victims = files under cfg.minBytes, packed FFD
    * per partition; bins are grouped into ~`cfg.groupBytes` Spark jobs; in
-   * each job every bin is shuffled to exactly one output task (see
-   * ExactPartition / FileBin) and locally sorted by cfg.sortBy. Unaffected
-   * files and manifests are carried through untouched.
+   * each job every bin is shuffled by its index to exactly one output task
+   * (`FileBin` + `repartitionById`) and locally sorted by cfg.sortBy.
+   * Unaffected files and manifests are carried through untouched.
    */
   def compact(table: TokenTable, spark: SparkSession,
       cfg: RewriteConfig = RewriteConfig(), nowMs: Long = 0L): Snapshot = {
@@ -232,14 +211,12 @@ object Rewrite {
   private def rewriteBins(table: TokenTable, spark: SparkSession,
       bins: Seq[Bin], sortBy: String, dict: Seq[String],
       schema: org.apache.spark.sql.types.StructType): Path = {
-    val nBins = bins.size
-    val binKeys = ExactPartition.keys(nBins)
-    // file basename -> exact-placement key of its bin: O(1) hash lookup in
-    // a codegen'd expression (graft.functions.FileBin) — constant per-row
-    // cost at any victim-file count (VERDICT r2 "What's wrong" #3 replaced
-    // a per-row LINEAR scan of a 2·B-entry map literal)
+    // file basename -> index of its bin: O(1) hash lookup in a codegen'd
+    // expression (graft.functions.FileBin) — constant per-row cost at any
+    // victim-file count (VERDICT r2 "What's wrong" #3 replaced a per-row
+    // LINEAR scan of a 2·B-entry map literal)
     val pairs = bins.zipWithIndex.flatMap { case (b, i) =>
-      b.files.map(f => f.path -> binKeys(i))
+      b.files.map(f => f.path -> i)
     }
     val paths = bins.flatMap(_.files).map(f => table.log.absolute(f.path).toString)
     val out = table.log.newDataSubdir()
@@ -247,7 +224,7 @@ object Rewrite {
     // (reading the fixed base schema here would silently drop them)
     val base = spark.read.schema(schema).parquet(paths: _*)
       .withColumn("__bk", graft.functions.FileBin.bin(input_file_name(), pairs))
-      .repartition(nBins, col("__bk"))
+      .repartitionById(bins.size, col("__bk"))
     val sorted = sortColumn(sortBy, dict) match {
       case Some(c) => base.withColumn("__sk", c)
         .sortWithinPartitions(col("__sk")).drop("__sk")
@@ -267,9 +244,9 @@ object Rewrite {
    *     decodes the token arrays; rows are picked by a hash of doc_id so
    *     the sample (hence boundaries, hence file layout) is identical at
    *     every parallelism level;
-   *  2. write jobs in ~groupBytes groups of whole partitions: a composite
-   *     when(source)/RangeBin bin column places every row in exactly one
-   *     output task; sortWithinPartitions finishes the clustering.
+   *  2. write jobs in ~groupBytes groups of whole partitions: per-source
+   *     range bin ids (`RangeBin.bySource`) place every row in exactly one
+   *     output task through `repartitionById`.
    */
   def cluster(table: TokenTable, spark: SparkSession,
       cfg: RewriteConfig = RewriteConfig(sortBy = "zkey"), nowMs: Long = 0L): Snapshot = {
@@ -352,28 +329,16 @@ object Rewrite {
             table.collectEntries(table.log.absolute(rec.filesOut.head)))
         case None =>
           val paths = grp.flatMap(_._2).map(f => table.log.absolute(f.path).toString)
-          // composite bin: per-source RangeBin over disjoint key slices.
           // The bin input REFERENCES the precomputed __sk column — inlining
           // the zkey expression into all 12 when-branches blows Janino's
           // 64 KB method limit and drops the stage out of codegen.
-          var base = 0
-          val pieces = grp.map { case (p, _, _, _) =>
-            val bnds = boundsBySource.getOrElse(p, Array.empty[Long])
-            val piece = (p, base, bnds)
-            base += bnds.length + 1
-            piece
-          }
-          val pkeys = ExactPartition.keys(base)
           val binRef: Column = cfg.sortBy match {
             case "zkey" | "hilbert" => col("__sk")
             case _ => graft.functions.PrefixCode.code(col("doc_id"), 7)
           }
-          val binCol = pieces.foldLeft(lit(pkeys(0)): Column) {
-            case (acc, (p, b0, bnds)) =>
-              when(col("source") === p, graft.functions.RangeBin.bin(
-                binRef, bnds, pkeys.slice(b0, b0 + bnds.length + 1)))
-                .otherwise(acc)
-          }
+          val (binCol, nBins) = graft.functions.RangeBin.bySource(
+            col("source"), binRef, grp.map { case (p, _, _, _) =>
+              p -> boundsBySource.getOrElse(p, Array.empty[Long]) })
           val out = table.log.newDataSubdir()
           lin.heartbeat(pid)
           // no within-file sort: file-level min/max stats — what the
@@ -384,7 +349,7 @@ object Rewrite {
           val binned = spark.read.schema(table.schemaOf(snap)).parquet(paths: _*)
             .withColumn("__sk", key)
             .withColumn("__bk", binCol)
-            .repartition(base, col("__bk"))
+            .repartitionById(nBins, col("__bk"))
           TokenTable.writeData(binned.drop("__sk", "__bk"), out)
           val entries = table.collectEntries(out)
           lin.append(LineageRecord(pid, op, gKey, "done",

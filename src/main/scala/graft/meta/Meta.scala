@@ -252,43 +252,4 @@ object SnapshotLog {
     val s = Files.list(dir)
     try s.iterator().asScala.toSeq finally s.close()
   }
-
-  /**
-   * Percent-decoding with URI *path* semantics: `%XX` sequences decode,
-   * `+` stays a literal plus. `java.net.URLDecoder` implements FORM
-   * encoding (`+` → space), which corrupts any partition value containing
-   * a '+' alongside a percent-escaped character (ADVICE r4 #2 — arbitrary
-   * source strings reach partition dirs via the SQL INSERT front door).
-   * Malformed escapes (stray '%') throw IllegalArgumentException, matching
-   * URLDecoder so existing retry-guards keep working.
-   */
-  def uriPathDecode(s: String): String = {
-    if (s.indexOf('%') < 0) return s
-    val bytes = new java.io.ByteArrayOutputStream(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%') {
-        if (i + 2 >= s.length)
-          throw new IllegalArgumentException(s"incomplete %-escape in: $s")
-        val hi = Character.digit(s.charAt(i + 1), 16)
-        val lo = Character.digit(s.charAt(i + 2), 16)
-        if (hi < 0 || lo < 0)
-          throw new IllegalArgumentException(s"malformed %-escape in: $s")
-        bytes.write((hi << 4) | lo)
-        i += 3
-      } else {
-        // non-escaped chars pass through as their UTF-8 bytes
-        val chunkEnd = {
-          var j = i
-          while (j < s.length && s.charAt(j) != '%') j += 1
-          j
-        }
-        bytes.write(s.substring(i, chunkEnd)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        i = chunkEnd
-      }
-    }
-    new String(bytes.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-  }
 }

@@ -68,8 +68,9 @@ object VectorOps {
   }
 
   /** 4-bit sign-LSH bucket from block sums of 16 coordinates each (float
-    * input; block sum = the same sequential cast-and-add fold). `get` —
-    * not `getItem` — so a malformed short vector yields a null block sum
+    * or double input; block sum = the same sequential cast-and-add fold,
+    * and the optimizer drops the cast on a double array). `get` — not
+    * `getItem` — so a malformed short vector yields a null block sum
     * (bit "0") instead of an ANSI out-of-bounds error; 64-dim inputs are
     * untouched. */
   private def bucket(e: Column): Column = {
@@ -114,17 +115,6 @@ object VectorOps {
       .orderBy("q_id")
   }
 
-  /** sign-LSH bucket over an already-double array (same OOB-null
-    * discipline as `bucket`) */
-  private def bucketD(e: Column): Column = {
-    val bits = (0 until 4).map { k =>
-      val blockSum = (0 until 16).foldLeft(lit(0.0))((acc, j) =>
-        acc + get(e, lit(k * 16 + j)))
-      when(blockSum >= 0, "1").otherwise("0")
-    }
-    concat(bits: _*)
-  }
-
   /**
    * Embedding-cosine near-dup corpus: the raw table unioned with a
    * perturbed clone of every 5th vector (coordinate 0 shifted by +0.125 —
@@ -162,7 +152,7 @@ object VectorOps {
    */
   def dedupEmbeddingCosine(corpus: DataFrame, threshold: Double,
       bucketCap: Int): DataFrame = {
-    val e = corpus.withColumn("bucket", bucketD(col("de")))
+    val e = corpus.withColumn("bucket", bucket(col("de")))
       .withColumn("nrm", sqrt(dot(col("de"), col("de"))))
       .cache()
     val small = e.groupBy("bucket").agg(count(lit(1)).as("bn"))
@@ -300,7 +290,7 @@ object VectorOps {
     s"CASE WHEN list_aggregate(list_transform(range($lo, ${hi + 1}), i -> CAST(embedding[i] AS DOUBLE)), 'sum') >= 0 THEN '1' ELSE '0' END"
   }.mkString(" || ")
 
-  /** bucketD over a double list named `de` (fold order mirrors Spark's
+  /** `bucket` over a double list named `de` (fold order mirrors Spark's
     * sequential fold — the e02-proven pattern) */
   private val bucketDSql = (0 until 4).map { k =>
     val lo = k * 16 + 1; val hi = k * 16 + 16

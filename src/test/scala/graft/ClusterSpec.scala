@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.cluster.{Hilbert, ZOrder}
-import graft.maint.{ExactPartition, Packer}
+import graft.gen.Synth
+import graft.maint.{Bin, Packer, Rewrite, RewriteConfig}
 import graft.meta.DataFile
 
 /** Property suite per SURVEY.md §5.2 item 4 — seeded exhaustive/random
@@ -87,17 +88,69 @@ class ClusterSpec extends SparkTestBase {
     assert(a.map(_.files.map(_.path)) === b.map(_.files.map(_.path)))
   }
 
+  /** A 48-file table over Synth's sources and the FFD bins
+    * `Rewrite.compact` plans from its manifest, at a target that splits the
+    * hot "web" source into several bins. Returns (table, files, config,
+    * bins). */
+  private def compactionFixture(name: String)
+      : (TokenTable, Seq[DataFile], RewriteConfig, Seq[Bin]) = {
+    val t = TokenTable.create(tmpDir(name), spark)
+    t.append(Synth.table(spark, 8000, seed = 5L, minTok = 16, maxTok = 128),
+      targetFileCount = 48, nowMs = 1L)
+    val files = t.log.dataFiles(t.log.current().get)
+    val webBytes = files.filter(_.partition.get("source").contains("web"))
+      .map(_.bytes).sum
+    val cfg = RewriteConfig(targetFileBytes = webBytes / 6, sortBy = "docid")
+    val bins = files.groupBy(_.partition.getOrElse("source", "")).toSeq
+      .sortBy(_._1).flatMap { case (p, fs) =>
+        val victims = fs.filter(_.bytes < cfg.minBytes)
+        if (victims.size < 2) Seq.empty
+        else Packer.ffd(p, victims, cfg.targetFileBytes).filter(_.files.size >= 2)
+      }
+    (t, files, cfg, bins)
+  }
+
+  /** Files the current snapshot holds beyond `before`. */
+  private def addedFiles(t: TokenTable, before: Seq[DataFile]): Seq[DataFile] = {
+    val old = before.map(_.path).toSet
+    t.log.dataFiles(t.log.current().get).filterNot(f => old(f.path))
+  }
+
+  /** doc_ids of each file (by manifest path), in file order: every file
+    * is far below one scan split, so one task reads it front to back. */
+  private def docIdsByFile(t: TokenTable, files: Seq[DataFile])
+      : Map[String, Seq[String]] = {
+    val byAbs = files.map(f => t.log.absolute(f.path).toString -> f.path).toMap
+    spark.read.schema(TokenRow.schema).parquet(byAbs.keys.toSeq: _*)
+      .select(input_file_name(), col("doc_id")).collect().toSeq
+      .groupBy(r => byAbs(new java.net.URI(r.getString(0)).getPath))
+      .map { case (p, rs) => p -> rs.map(_.getString(1)) }
+  }
+
   test("exact-placement keys land each bin on its own shuffle partition") {
-    import spark.implicits._
-    val n = 13
-    val keys = ExactPartition.keys(n)
-    val rows = keys.toSeq.toDF("k")
-      .repartition(n, col("k"))
-      .select(col("k"), spark_partition_id().as("p"))
-      .collect()
-    val placement = rows.map(r => r.getInt(0) -> r.getInt(1)).toMap
-    keys.zipWithIndex.foreach { case (k, j) =>
-      assert(placement(k) === j, s"key $k for bin $j landed on ${placement(k)}")
+    // compaction places FFD bin i on write task i, so each bin becomes
+    // exactly one file (bins are partition-pure) holding exactly its rows
+    val (t, before, cfg, bins) = compactionFixture("graft-placement")
+    assert(bins.size >= 3 && bins.groupBy(_.partition).exists(_._2.size >= 2),
+      s"bins per source: ${bins.groupBy(_.partition).map(b => b._1 -> b._2.size)}")
+    Rewrite.compact(t, spark, cfg, nowMs = 2L)
+    val added = addedFiles(t, before)
+    assert(added.size === bins.size)
+    val inDocs = docIdsByFile(t, before)
+    val binDocs = bins.map(_.files.flatMap(f => inDocs(f.path)).toSet)
+    val outDocs = docIdsByFile(t, added).values.map(_.toSet)
+    assert(outDocs.toSet === binDocs.toSet)
+  }
+
+  test("compaction under the production writer settings writes each file in doc_id order") {
+    // with concurrent output writers the planned write adds no sort on
+    // p_source, so the bin's doc_id sort is the file order
+    val (t, before, cfg, bins) = compactionFixture("graft-compact-sort")
+    withProductionWrites(Rewrite.compact(t, spark, cfg, nowMs = 2L))
+    val added = addedFiles(t, before)
+    assert(added.size === bins.size)
+    docIdsByFile(t, added).foreach { case (p, ids) =>
+      assert(ids === ids.sorted, s"$p is not in doc_id order")
     }
   }
 
@@ -109,8 +162,6 @@ class ClusterSpec extends SparkTestBase {
     // default 128 MB ones, and require identical per-file (partition,
     // rows, stats) manifests and equal content fingerprints. Rewrite.cluster
     // has no within-file sort, so row order is the exchange's either way.
-    import graft.gen.Synth
-    import graft.maint.{Rewrite, RewriteConfig}
     def build(rowGroupBytes: Option[Long])
         : (Seq[(String, Long, Map[String, String])], java.math.BigDecimal) = {
       val root = tmpDir(s"graft-sortmode-${rowGroupBytes.getOrElse("default")}")

@@ -231,6 +231,13 @@ class ConflictSpec extends SparkTestBase {
     val got = vs.toDF("v").select(RangeBin.bin(col("v"), bounds, keys).as("b"))
       .collect().map(_.getInt(0)).toSeq
     assert(got === vs.map(v => keys(ref(v))))
+    // per-source ids: consecutive blocks in list order, other sources last
+    val (ids, n) = RangeBin.bySource(col("s"), col("v"),
+      Seq("a" -> bounds, "b" -> Array(50L)))
+    assert(n === 7)
+    val placed = Seq(("a", 15L), ("a", 30L), ("b", 49L), ("b", 50L), ("c", 0L))
+      .toDF("s", "v").select(ids).collect().map(_.getInt(0)).toSeq
+    assert(placed === Seq(1, 3, 4, 5, 6))
   }
 
   test("Boundaries.fromFileStats cuts ~targetBytes bins inside the spans") {

@@ -14,20 +14,6 @@ import graft.maint.Merge
  */
 class PackedMergeSpec extends SparkTestBase {
 
-  /** runs `f` under the production session's split and writer settings */
-  private def withProductionWrites[A](f: => A): A = {
-    val keys = Seq(
-      "spark.sql.maxConcurrentOutputFileWriters" -> "4",
-      "spark.sql.files.maxPartitionBytes" -> (32L * 1024 * 1024).toString)
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("packed copy-forward merge: equals the reference, single-source " +
       "outputs, fewer files than touched inputs") {
     val t = TokenTable.create(tmpDir("graft-packed"), spark)

@@ -8,6 +8,21 @@ trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** runs `f` under the production session's split and writer settings
+    * (`Maintain.session`), restoring this session's values after */
+  def withProductionWrites[A](f: => A): A = {
+    val keys = Seq(
+      "spark.sql.maxConcurrentOutputFileWriters" -> "4",
+      "spark.sql.files.maxPartitionBytes" -> (32L * 1024 * 1024).toString)
+    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkTestBase {
